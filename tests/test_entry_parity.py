@@ -26,13 +26,28 @@ def duck():
 @pytest.mark.parametrize("name", sorted(em.queries().keys()))
 def test_query_matches_oracle(spark, duck, name):
     spdf = em.queries()[name](spark, SF_DIR).toPandas()
-    sql = em.oracle_sql().get(name)
-    if sql is None:
-        assert len(spdf) >= 0  # rows-only check (non-SQL-expressible op)
-        return
-    ddf = duck.execute(sql).fetchdf()
+    ddf = duck.execute(em.oracle_sql()[name]).fetchdf()
     errs = compare(name, spdf, ddf)
     assert not errs, errs
+
+
+def test_assemble_rejects_duplicate_undeclared_and_unlisted():
+    def q(spark, sf_dir):
+        raise AssertionError("never called")
+
+    a = {"x": (q, "SELECT 1"), "y": (q, "SELECT 2")}
+    b = {"z": (q, "SELECT 3")}
+    got = em.assemble(["z", "x", "y"], [a, b])
+    assert list(got) == ["z", "x", "y"]
+    assert got["z"] == (q, "SELECT 3")
+    with pytest.raises(ValueError, match="declared twice.*'x'"):
+        em.assemble(["x", "y"], [a, {"x": (q, "SELECT 9")}])
+    with pytest.raises(ValueError, match="lists a name twice"):
+        em.assemble(["z", "x", "y", "x"], [a, b])
+    with pytest.raises(ValueError, match="no family declares.*'w'"):
+        em.assemble(["x", "y", "z", "w"], [a, b])
+    with pytest.raises(ValueError, match="missing from ORDER.*'z'"):
+        em.assemble(["x", "y"], [a, b])
 
 
 def test_entry_smoke(spark):

@@ -17,26 +17,38 @@ import os
 import sys
 
 
+def bench_doc(path: str) -> dict:
+    """The one bench document in a bench.py stdout capture.
+
+    Exactly one line must be a JSON object carrying a ``queries`` dict; log
+    lines around it are skipped. Zero or several such lines raise
+    ValueError rather than fold the wrong document."""
+    docs = []
+    with open(path) as fh:
+        for ln in fh.read().splitlines():
+            ln = ln.strip()
+            if not ln.startswith("{"):
+                continue
+            try:
+                doc = json.loads(ln)
+            except json.JSONDecodeError:
+                continue
+            if isinstance(doc, dict) and isinstance(doc.get("queries"), dict):
+                docs.append(doc)
+    if len(docs) != 1:
+        raise ValueError(
+            f"{path}: expected one JSON line with a 'queries' dict, "
+            f"found {len(docs)}"
+        )
+    return docs[0]
+
+
 def main() -> None:
     out_path = sys.argv[1]
-    sessions = []
-    for p in sys.argv[2:]:
-        with open(p) as fh:
-            # the bench prints exactly one JSON object line; tolerate log
-            # noise around it by taking the last line that parses
-            doc = None
-            for ln in fh.read().splitlines():
-                ln = ln.strip()
-                if ln.startswith("{"):
-                    try:
-                        doc = json.loads(ln)
-                    except json.JSONDecodeError:
-                        continue
-            assert doc is not None, f"no JSON line in {p}"
-            sessions.append(doc)
+    sessions = [bench_doc(p) for p in sys.argv[2:]]
     folded: dict[str, float] = {}
     for s in sessions:
-        for k, v in s.get("queries", {}).items():
+        for k, v in s["queries"].items():
             folded[k] = min(v, folded.get(k, v))
     art = {"queries": folded, "sessions": sessions}
     if os.path.exists("BENCH/plan_hashes.json"):

@@ -78,11 +78,14 @@ def main() -> None:
         plan = (
             fn(spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
         )
-        # sha256 of the plan text with expression IDs normalized away, so
-        # the hash is stable across sessions and a cross-round timing
-        # drift on unchanged code is mechanically attributable to host vs
-        # plan (VERDICT r06 observation #2 / next-round #6).
+        # sha256 of the plan text with expression IDs and exchange plan_ids
+        # normalized away, so the hash is stable across sessions and a
+        # cross-round timing drift on unchanged code is mechanically
+        # attributable to host vs plan (VERDICT r06 observation #2 /
+        # next-round #6). plan_id is a session-wide counter: the number of
+        # plans an earlier query built moves it for every later query.
         canon = re.sub(r"#\d+[L]?", "#", plan)
+        canon = re.sub(r"plan_id=\d+", "plan_id=", canon)
         plan_hashes[name] = hashlib.sha256(canon.encode()).hexdigest()[:16]
         f = plan_facts(plan)
         if f["banned"]:

@@ -1,10 +1,10 @@
 """Head-50 rotation audit for the __spark_entry__ registry (VERDICT r03 #7).
 
 The driver's correctness gate hashes the FIRST 50 ``queries()`` entries, so
-per-round rotations reorder the dict to earn driver-green rows for new
-queries. A rotation must change ORDER only — never the query/oracle
-CONTENT. This tool makes that reviewable by separating the two pins
-``tests/test_registry_pin.py`` asserts:
+per-round rotations reorder ``__spark_entry__.ORDER`` to bring new
+queries under that gate. A rotation must change ORDER only — never the
+query/oracle CONTENT. This tool makes that reviewable by separating the
+two pins ``tests/test_registry_pin.py`` asserts:
 
 - **content sha** — sha256 over (key, oracle_sql) sorted BY KEY: invariant
   under any rotation; changes only when a query/oracle is added, removed,
