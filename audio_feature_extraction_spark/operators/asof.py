@@ -46,11 +46,12 @@ from typing import Iterator
 
 import pandas as pd
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
 
 from audio_feature_extraction_spark.operators.timeutil import tol_us, ts_micros
+from audio_feature_extraction_spark.operators.windows import HISTORY, entity_window
 
 _MARK = "__is_ref"
 _TS = "__asof_ts"
@@ -63,6 +64,15 @@ def dedupe_right(right: DataFrame, on: list[str], ts: str) -> DataFrame:
     return right.groupBy(*on, ts).agg(*[F.max(c).alias(c) for c in payload])
 
 
+def _q(name: str) -> str:
+    """A column name as a quoted SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _null_of(df: DataFrame, c: str) -> str:
+    return f"CAST(NULL AS {df.schema[c].dataType.simpleString()})"
+
+
 def _union_frames(
     left: DataFrame,
     right: DataFrame,
@@ -72,22 +82,24 @@ def _union_frames(
     right_payload: list[str],
 ):
     lcols = left.columns
-    l = left.select(
-        *lcols,
-        F.col(left_ts).alias(_TS),
-        F.lit(0).alias(_MARK),
-        *[F.lit(None).cast(right.schema[c].dataType).alias(f"__r_{c}") for c in right_payload],
-        F.lit(None).cast(right.schema[right_ts].dataType).alias("__r_ts"),
+    l = left.selectExpr(
+        *[_q(c) for c in lcols],
+        f"{_q(left_ts)} AS {_TS}",
+        f"0 AS {_MARK}",
+        *[f"{_null_of(right, c)} AS {_q('__r_' + c)}" for c in right_payload],
+        f"{_null_of(right, right_ts)} AS __r_ts",
     )
-    r = right.select(
+    # the key columns keep a `c AS c` self-alias: without it the union's plan
+    # and every plan hash downstream of it would change
+    r = right.selectExpr(
         *[
-            F.col(c).alias(c) if c in on else F.lit(None).cast(left.schema[c].dataType).alias(c)
+            f"{_q(c)} AS {_q(c)}" if c in on else f"{_null_of(left, c)} AS {_q(c)}"
             for c in lcols
         ],
-        F.col(right_ts).alias(_TS),
-        F.lit(1).alias(_MARK),
-        *[F.col(c).alias(f"__r_{c}") for c in right_payload],
-        F.col(right_ts).alias("__r_ts"),
+        f"{_q(right_ts)} AS {_TS}",
+        f"1 AS {_MARK}",
+        *[f"{_q(c)} AS {_q('__r_' + c)}" for c in right_payload],
+        f"{_q(right_ts)} AS __r_ts",
     )
     return l.unionByName(r)
 
@@ -97,24 +109,23 @@ def _finish(matched: DataFrame, left_cols, left_ts, right_payload, tolerance_sec
     # merge_asof parity; also the broadcast strategies' behavior). Without
     # this, the forward window's desc sort (NULLS LAST) exposes EVERY right
     # row to a NULL-ts left row.
-    ok = F.col("__m___r_ts").isNotNull() & F.col(_TS).isNotNull()
+    ok = f"__m___r_ts IS NOT NULL AND {_TS} IS NOT NULL"
     if tolerance_sec is not None:
         # exact int64 microsecond arithmetic — no double-rounding at the
         # tolerance boundary
         if direction == "backward":
-            lag = ts_micros(_TS) - ts_micros("__m___r_ts")
+            lag = f"{ts_micros(_TS)} - {ts_micros('__m___r_ts')}"
         else:
-            lag = ts_micros("__m___r_ts") - ts_micros(_TS)
-        ok = ok & (lag <= F.lit(tol_us(tolerance_sec)))
-    out = matched.where(F.col(_MARK) == 0).select(
-        *left_cols,
-        F.when(ok, F.col("__m___r_ts")).otherwise(F.lit(None)).alias("matched_ts"),
+            lag = f"{ts_micros('__m___r_ts')} - {ts_micros(_TS)}"
+        ok = f"({ok}) AND {lag} <= {tol_us(tolerance_sec)}"
+    return matched.where(f"{_MARK} = 0").selectExpr(
+        *[_q(c) for c in left_cols],
+        f"CASE WHEN {ok} THEN __m___r_ts ELSE NULL END AS matched_ts",
         *[
-            F.when(ok, F.col(f"__m___r_{c}")).otherwise(F.lit(None)).alias(c)
+            f"CASE WHEN {ok} THEN {_q('__m___r_' + c)} ELSE NULL END AS {_q(c)}"
             for c in right_payload
         ],
     )
-    return out
 
 
 def asof_join(
@@ -180,12 +191,12 @@ def asof_join(
     part_keys = list(on)
     if strategy == "salted":
         salt_on = salt_on or [left_ts]
-        salt = F.pmod(F.xxhash64(*salt_on), F.lit(salt_buckets)).cast("int")
+        salt = f"CAST(pmod(xxhash64({', '.join(map(_q, salt_on))}), {salt_buckets}) AS INT)"
         # left rows pick one salt; right rows are replicated to every salt so
         # each salt cell sees the complete right side for its key
-        l_salted = u.where(F.col(_MARK) == 0).withColumn(_SALT, salt)
-        r_salted = u.where(F.col(_MARK) == 1).withColumn(
-            _SALT, F.explode(F.sequence(F.lit(0), F.lit(salt_buckets - 1)))
+        l_salted = u.where(f"{_MARK} = 0").withColumn(_SALT, F.expr(salt))
+        r_salted = u.where(f"{_MARK} = 1").withColumn(
+            _SALT, F.expr(f"explode(sequence(0, {salt_buckets - 1}))")
         )
         u = l_salted.unionByName(r_salted)
         part_keys = part_keys + [_SALT]
@@ -197,60 +208,50 @@ def asof_join(
         )
         u = u.repartition(nparts, *cluster_on)
 
-    wb = (
-        Window.partitionBy(*part_keys)
-        .orderBy(F.col(_TS).asc(), F.col(_MARK).desc())
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    wf = (
-        Window.partitionBy(*part_keys)
-        .orderBy(F.col(_TS).desc(), F.col(_MARK).desc())
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
+    keys = [_q(k) for k in part_keys]
+    wb = entity_window(keys, [_TS, f"{_MARK} DESC"]).over(HISTORY)
+    wf = entity_window(keys, [f"{_TS} DESC", f"{_MARK} DESC"]).over(HISTORY)
     # ONE last() over a struct that is non-NULL for every right row — NOT a
     # per-column last(payload, ignorenulls): that would skip a genuine right
     # row whose payload value is NULL and resurrect an older non-NULL value,
     # conflating "no partner row" with "partner row with NULL value"
     # (hypothesis-found: left ts=1 matching right (ts=1, v=NULL) must yield
     # NULL, not the v of (ts=0)).
-    m_struct = F.when(
-        F.col(_MARK) == 1,
-        F.struct(
-            F.col("__r_ts").alias("ts"),
-            *[F.col(f"__r_{c}").alias(c) for c in right_payload],
-        ),
+    fields = ", ".join(
+        ["__r_ts AS ts", *[f"{_q('__r_' + c)} AS {_q(c)}" for c in right_payload]]
     )
+    m_struct = f"CASE WHEN {_MARK} = 1 THEN struct({fields}) END"
     if direction == "nearest":
         t_us = tol_us(tolerance_sec)
-        matched = u.select(
+        matched = u.selectExpr(
             "*",
-            F.last(m_struct, ignorenulls=True).over(wb).alias("__mb"),
-            F.last(m_struct, ignorenulls=True).over(wf).alias("__mf"),
+            f"last({m_struct}, true) {wb} AS __mb",
+            f"last({m_struct}, true) {wf} AS __mf",
         )
-        blag = ts_micros(_TS) - ts_micros("__mb.ts")
-        flag = ts_micros("__mf.ts") - ts_micros(_TS)
+        blag = f"{ts_micros(_TS)} - {ts_micros('__mb.ts')}"
+        flag = f"{ts_micros('__mf.ts')} - {ts_micros(_TS)}"
         # NULL left-ts rows never match (see _finish)
-        lts_ok = F.col(_TS).isNotNull()
-        valid_b = lts_ok & F.col("__mb.ts").isNotNull()
-        valid_f = lts_ok & F.col("__mf.ts").isNotNull()
+        valid_b = f"{_TS} IS NOT NULL AND __mb.ts IS NOT NULL"
+        valid_f = f"{_TS} IS NOT NULL AND __mf.ts IS NOT NULL"
         if t_us is not None:
-            valid_b = valid_b & (blag <= F.lit(t_us))
-            valid_f = valid_f & (flag <= F.lit(t_us))
-        chosen = F.when(
-            valid_b & (~valid_f | (blag <= flag)), F.col("__mb")
-        ).when(valid_f, F.col("__mf"))
-        return matched.where(F.col(_MARK) == 0).select(
-            *left.columns,
-            chosen["ts"].alias("matched_ts"),
-            *[chosen[c].alias(c) for c in right_payload],
+            valid_b = f"({valid_b}) AND {blag} <= {t_us}"
+            valid_f = f"({valid_f}) AND {flag} <= {t_us}"
+        # the parentheses keep this AND tree left-deep: the parser balances
+        # a chain of four or more ANDs, which would change the plan
+        chosen = (
+            f"(CASE WHEN ({valid_b}) AND (NOT ({valid_f}) OR {blag} <= {flag}) "
+            f"THEN __mb WHEN {valid_f} THEN __mf END)"
+        )
+        return matched.where(f"{_MARK} = 0").selectExpr(
+            *[_q(c) for c in left.columns],
+            f"{chosen}.ts AS matched_ts",
+            *[f"{chosen}.{_q(c)} AS {_q(c)}" for c in right_payload],
         )
     w = wb if direction == "backward" else wf
-    matched = u.select(
-        "*", F.last(m_struct, ignorenulls=True).over(w).alias("__m")
-    ).select(
+    matched = u.selectExpr("*", f"last({m_struct}, true) {w} AS __m").selectExpr(
         "*",
-        *[F.col(f"__m.{c}").alias(f"__m___r_{c}") for c in right_payload],
-        F.col("__m.ts").alias("__m___r_ts"),
+        *[f"__m.{_q(c)} AS {_q('__m___r_' + c)}" for c in right_payload],
+        "__m.ts AS __m___r_ts",
     )
     return _finish(matched, left.columns, left_ts, right_payload, tolerance_sec, direction)
 
@@ -306,11 +307,11 @@ def _broadcast_asof(
     m_ts = hit["ts"]
     if tolerance_sec is not None:
         tol = F.lit(tol_us(tolerance_sec))
-        lag = (
-            ts_micros(left_ts) - ts_micros(m_ts)
-            if direction == "backward"
-            else ts_micros(m_ts) - ts_micros(left_ts)
-        )
+        l_us = F.expr(ts_micros(left_ts))
+        # m_ts comes out of a Python-lambda filter, so it has no SQL text:
+        # the ts_micros rule spelled as Column calls
+        m_us = F.unix_micros(m_ts.cast("timestamp"))
+        lag = l_us - m_us if direction == "backward" else m_us - l_us
         ok = m_ts.isNotNull() & (lag <= tol)
     else:
         ok = m_ts.isNotNull()

@@ -531,7 +531,7 @@ def first_per_window(
     from audio_feature_extraction_spark.operators.timeutil import ts_micros
 
     win_us = int(round(window_sec * 1_000_000))
-    us = ts_micros(ts)
+    us = F.expr(ts_micros(ts))
     start = (us - F.pmod(us, F.lit(win_us))).alias(out)
     with_win = df.withColumn(out, start)
     order = [F.col(ts).asc()] + [F.col(c).asc() for c in (tiebreak or [])]

@@ -340,7 +340,7 @@ def band_join_stats(
     hi_us = int(round(hi_sec * 1_000_000))
     r = right.select(
         *[F.col(c).alias(f"__r_{c}") for c in on],
-        ts_micros(right_ts).alias("__r_us"),
+        F.expr(ts_micros(right_ts)).alias("__r_us"),
         *([F.col(value_col).alias("__r_val")] if value_col else []),
     )
     lag = F.col("__l_us") - F.col("__r_us")
@@ -353,7 +353,7 @@ def band_join_stats(
     # would collapse duplicate left rows into one row with summed stats.
     # The id never reaches the output, so its partition-dependent values
     # can't leak nondeterminism.
-    l = left.withColumn("__l_us", ts_micros(left_ts)).withColumn(
+    l = left.withColumn("__l_us", F.expr(ts_micros(left_ts))).withColumn(
         "__l_rid", F.monotonically_increasing_id()
     )
     j = l.join(r, cond, "left_outer")

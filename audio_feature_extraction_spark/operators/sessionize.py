@@ -11,15 +11,38 @@ entity key, both windows share it):
   2. new[t]   = gap > threshold
   3. session  = running_sum(new)    -- cumulative count of session breaks
 
+The steps render Spark SQL text (see ``operators.windows``):
+:func:`session_break` is steps 1-2, :func:`session_number` step 3.
+``plans.pipeline`` puts them in two consecutive feature projections, so
+each shares a Window node with the other features of its layer.
+
 Streaming variant: ``streaming.sessions`` uses ``session_window`` directly.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from audio_feature_extraction_spark.operators.timeutil import ts_micros
+from audio_feature_extraction_spark.operators.windows import (
+    HISTORY,
+    EntityWindow,
+    entity_window,
+)
+
+
+def session_break(w: EntityWindow, ts: str, gap_sec: float) -> str:
+    """1 where the event-time gap to the previous row exceeds ``gap_sec``
+    (exact int64 µs), else 0 — the first row of an entity is 0."""
+    us = ts_micros(ts)
+    gap_us = int(round(gap_sec * 1_000_000))
+    return f"CASE WHEN {us} - lag({us}, 1) {w.over()} > {gap_us} THEN 1 ELSE 0 END"
+
+
+def session_number(brk: str, w: EntityWindow) -> str:
+    """Running count of session breaks: the 0-based per-entity session id."""
+    return f"CAST(sum({brk}) {w.over(HISTORY)} AS BIGINT)"
 
 
 def with_session_id(
@@ -31,14 +54,8 @@ def with_session_id(
     out: str = "session_id",
 ) -> DataFrame:
     """Add a 0-based per-entity session id column."""
-    order = order or [ts]
-    w = Window.partitionBy(*keys).orderBy(*order)
-    hist = w.rowsBetween(Window.unboundedPreceding, 0)
-    gap_us = ts_micros(ts) - F.lag(ts_micros(ts), 1).over(w)
-    is_new = F.when(
-        gap_us > F.lit(int(round(gap_sec * 1_000_000))), F.lit(1)
-    ).otherwise(F.lit(0))
-    return df.withColumn(out, F.sum(is_new).over(hist).cast("long"))
+    w = entity_window(keys, order or [ts])
+    return df.withColumn(out, F.expr(session_number(session_break(w, ts, gap_sec), w)))
 
 
 def session_bounds(
@@ -56,8 +73,8 @@ def session_bounds(
         F.max(ts).alias("session_end"),
         F.count(F.lit(1)).alias("n_rows"),
     )
-    dur = (ts_micros("session_end") - ts_micros("session_start")).cast("double") / 1e6
-    agg = agg.withColumn("duration_sec", dur)
+    dur = f"CAST({ts_micros('session_end')} - {ts_micros('session_start')} AS DOUBLE)"
+    agg = agg.withColumn("duration_sec", F.expr(f"{dur} / 1000000.0D"))
     if min_duration_sec is not None:
         agg = agg.where(F.col("duration_sec") >= F.lit(float(min_duration_sec)))
     if min_rows is not None:
@@ -91,14 +108,13 @@ def with_capped_session_id(
     base = with_session_id(
         df, keys, ts=ts, order=order, gap_sec=gap_sec, out="__gap_sid"
     )
-    w = Window.partitionBy(*keys, "__gap_sid")
-    start_us = F.min(ts_micros(ts)).over(w)
+    start_us = f"min({ts_micros(ts)}) {entity_window([*keys, '__gap_sid']).over()}"
     cap_us = int(round(max_duration_sec * 1_000_000))
     # exact pane index: strip the remainder FIRST so the division is an
     # exact-multiple / divisor (IEEE-exact) — floor(float_div) can misbucket
     # a row sitting exactly on a pane boundary
-    diff = ts_micros(ts) - start_us
-    sub = ((diff - F.pmod(diff, F.lit(cap_us))) / F.lit(cap_us)).cast("long")
+    diff = f"({ts_micros(ts)} - {start_us})"
+    sub = F.expr(f"CAST(({diff} - pmod({diff}, {cap_us})) / {cap_us} AS BIGINT)")
     return (
         base.withColumn(sub_out, sub)
         .withColumn(out, F.col("__gap_sid"))

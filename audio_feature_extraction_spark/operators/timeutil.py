@@ -6,17 +6,18 @@ only accepts TIMESTAMP. All engine event-time math goes through
 :func:`ts_micros` so either type works: NTZ is cast to TIMESTAMP first
 (session-tz reinterpretation — harmless for the *differences* the engine
 computes, which is all it ever does with these values).
+
+:func:`ts_micros` renders Spark SQL text, like the window helpers in
+``operators.windows``: callers splice it into a larger expression and reach
+the JVM once, through ``F.expr`` or ``selectExpr``.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
 
-
-def ts_micros(col: Column | str) -> Column:
-    c = F.col(col) if isinstance(col, str) else col
-    return F.unix_micros(c.cast("timestamp"))
+def ts_micros(col: str) -> str:
+    """Epoch microseconds of ``col`` (a column name or SQL expression)."""
+    return f"unix_micros(CAST({col} AS TIMESTAMP))"
 
 
 def tol_us(tolerance_sec: float | None) -> int | None:

@@ -10,19 +10,31 @@ For every row of the input sequences table:
 Must match ``oracle.oracle_features`` (np.allclose on feature_vector,
 bit-identical int32 tokens) — see tests/test_pipeline_oracle.py.
 
-Physical shape: ONE hash exchange total. The as-of runs first with its union
-clustered on hash(doc_id) — a strict subset of the as-of window keys
-(source, doc_id), which still satisfies the window's ClusteredDistribution —
-and every subsequent feature window partitions by doc_id, so Spark reuses the
-same partitioning and plans sort-only for the rest of the pipeline. The fat
-token rows cross the wire exactly once. No pandas UDF anywhere — the whole
-plan is JVM window exec + projections, whole-stage-codegen eligible.
+Physical shape: ONE hash exchange of the fat token rows, ONE feature sort,
+3 Window nodes. The as-of runs first with its union clustered on hash(doc_id)
+— a strict subset of the as-of window keys (source, doc_id), which still
+satisfies the window's ClusteredDistribution — and the features then run as
+one projection per data-dependency layer over the same (doc_id; ts, seq)
+window:
+
+- layer 1 reads only as-of output: ``v_filled`` (LOCF), ``cum_tokens`` and
+  the session-break flag;
+- layer 2 reads layer 1: ``delta1``, ``delta9``, ``roll_mean``,
+  ``roll_std`` and ``session_id`` (the running sum of the break flags).
+
+Catalyst plans one Window node per layer, both on the as-of exchange's
+hash(doc_id) partitioning; layer 2 reuses layer 1's sort order. No pandas
+UDF anywhere — the whole plan is JVM window exec + projections,
+whole-stage-codegen eligible.
+
+Every step is Spark SQL text handed to the JVM in one ``selectExpr``
+(see ``operators.windows``): building the plan costs a couple of hundred
+Py4J round trips, not thousands.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 
 from audio_feature_extraction_spark.oracle import (
     ASOF_TOL_SEC,
@@ -32,7 +44,10 @@ from audio_feature_extraction_spark.oracle import (
 from audio_feature_extraction_spark.operators import windows as W
 from audio_feature_extraction_spark.operators.asof import asof_join
 from audio_feature_extraction_spark.operators.backfill import locf
-from audio_feature_extraction_spark.operators.sessionize import with_session_id
+from audio_feature_extraction_spark.operators.sessionize import (
+    session_break,
+    session_number,
+)
 from audio_feature_extraction_spark.operators.timeutil import ts_micros
 
 
@@ -57,40 +72,38 @@ def feature_pipeline(
         cluster_on=["doc_id"] if asof_strategy == "window" else None,
     )
 
-    w = Window.partitionBy("doc_id").orderBy("ts", "seq")
-
-    # point-in-time backfill + windowed features (no further exchange)
-    df = matched.withColumn("v_filled", locf("value", w, default=0.0))
-    df = df.withColumn("delta1", W.delta1("v_filled", w))
-    df = df.withColumn("delta9", W.delta_trailing("v_filled", w, half=4))
-    df = df.withColumn("roll_mean", W.rolling_mean("v_filled", w, ROLL_WINDOW))
-    df = df.withColumn("roll_std", W.rolling_std_pop("v_filled", w, ROLL_WINDOW))
-    df = df.withColumn("cum_tokens", W.running_sum(F.col("n_tok").cast("long"), w))
-    matched = with_session_id(
-        df, keys=["doc_id"], ts="ts", order=["ts", "seq"], gap_sec=gap_sec
+    w = W.entity_window(["doc_id"], ["ts", "seq"])
+    # point-in-time backfill + windowed features (no further exchange),
+    # one projection per data-dependency layer
+    layer1 = matched.selectExpr(
+        "*",
+        f"{locf('value', w, default=0.0)} AS v_filled",
+        f"{W.running_sum('CAST(n_tok AS BIGINT)', w)} AS cum_tokens",
+        f"{session_break(w, 'ts', gap_sec)} AS __brk",
+    )
+    layer2 = layer1.selectExpr(
+        "*",
+        f"{W.delta1('v_filled', w)} AS delta1",
+        f"{W.delta_trailing('v_filled', w, half=4)} AS delta9",
+        f"{W.rolling_mean('v_filled', w, ROLL_WINDOW)} AS roll_mean",
+        f"{W.rolling_std_pop('v_filled', w, ROLL_WINDOW)} AS roll_std",
+        f"{session_number('__brk', w)} AS session_id",
     )
 
     # exact µs subtraction first, one double division after (oracle parity)
-    lag_sec = (
-        (ts_micros("ts") - ts_micros("matched_ts")).cast("double") / 1e6
+    lag_sec = f"CAST({ts_micros('ts')} - {ts_micros('matched_ts')} AS DOUBLE) / 1000000.0D"
+    features = ", ".join([
+        "v_filled",
+        "delta1",
+        "delta9",
+        "roll_mean",
+        "roll_std",
+        "CAST(session_id AS DOUBLE)",
+        "CAST(n_tok AS DOUBLE)",
+        "CAST(cum_tokens AS DOUBLE)",
+        "coalesce(try_element_at(ref_vec, 1), 0.0D)",
+        f"coalesce({lag_sec}, -1.0D)",
+    ])
+    return layer2.selectExpr(
+        "doc_id", "seq", "ts", "session_id", f"array({features}) AS feature_vector", "tokens"
     )
-    out = matched.select(
-        "doc_id",
-        "seq",
-        "ts",
-        "session_id",
-        F.array(
-            F.col("v_filled"),
-            F.col("delta1"),
-            F.col("delta9"),
-            F.col("roll_mean"),
-            F.col("roll_std"),
-            F.col("session_id").cast("double"),
-            F.col("n_tok").cast("double"),
-            F.col("cum_tokens").cast("double"),
-            F.coalesce(F.try_element_at("ref_vec", F.lit(1)), F.lit(0.0)),
-            F.coalesce(lag_sec, F.lit(-1.0)),
-        ).alias("feature_vector"),
-        "tokens",
-    )
-    return out

@@ -43,7 +43,7 @@ def _q_dtw_band_cost(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select(
                 "user_id",
                 "value",
-                F.row_number().over(_uw()).alias("seq"),
+                F.expr(f"row_number() {_uw().over()}").alias("seq"),
             )
             .where(F.col("seq") <= _DTW_CAP)
         )

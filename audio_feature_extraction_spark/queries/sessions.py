@@ -47,7 +47,9 @@ def _q_session_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_rows",
         "session_start",
         "session_end",
-        (ts_micros("session_end") - ts_micros("session_start")).alias("duration_us"),
+        F.expr(f"{ts_micros('session_end')} - {ts_micros('session_start')}").alias(
+            "duration_us"
+        ),
     )
 
 _SQL_SESSION_STATS = f"""
@@ -138,8 +140,8 @@ def _q_session_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
         session_bounds(sid, keys=["user_id"], ts="ts")
         .select(
             "user_id",
-            ts_micros("session_start").alias("s"),
-            ts_micros("session_end").alias("e"),
+            F.expr(ts_micros("session_start")).alias("s"),
+            F.expr(ts_micros("session_end")).alias("e"),
         )
         .persist()
     )

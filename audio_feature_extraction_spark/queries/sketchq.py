@@ -33,13 +33,13 @@ def _q_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     # sf0.1): the md5/minute-floor per-row work is cheap relative to
     # shuffling the rows, and BOTH consumers partial-agg in the scan
     # stage (registers collapse to 2^p rows, exact-distinct to its keys).
+    us = ts_micros("ts")
     base = e.select("event_type", "user_id", "ts").select(
         "event_type",
         F.concat_ws(
             ":",
             F.col("user_id").cast("string"),
-            (ts_micros("ts") - F.pmod(ts_micros("ts"), F.lit(60_000_000)))
-            .cast("string"),
+            F.expr(f"CAST({us} - pmod({us}, 60000000) AS STRING)"),
         ).alias("v"),
     )
     regs = _SK.hll_registers(base, F.col("v"), ["event_type"], p=_HLL_P)

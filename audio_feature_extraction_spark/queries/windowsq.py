@@ -11,7 +11,7 @@ from audio_feature_extraction_spark.operators import stats as _ST
 from audio_feature_extraction_spark.operators.backfill import backfill
 from audio_feature_extraction_spark.operators.backfill import locf
 from audio_feature_extraction_spark.operators.timeutil import ts_micros
-from audio_feature_extraction_spark.operators.windows import trim_to_active
+from audio_feature_extraction_spark.operators.windows import dbl, trim_to_active
 from .common import DAY_US, _WU, _ev, _t, _uw
 
 
@@ -23,11 +23,11 @@ from .common import DAY_US, _WU, _ev, _t, _uw
 def _q_locf_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _ev(spark, sf_dir)
     w = _uw()
-    return ev.select(
+    return ev.selectExpr(
         "event_id",
         "user_id",
-        locf("v", w, default=0.0).alias("v_locf"),
-        backfill("v", w, default=None).alias("v_backfill"),
+        f"{locf('v', w, default=0.0)} AS v_locf",
+        f"{backfill('v', w, default=None)} AS v_backfill",
     )
 
 _SQL_LOCF_FILL = f"""
@@ -50,10 +50,10 @@ FROM b
 def _q_lag_lead_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _t(spark, sf_dir, "events")
     w = _uw()
-    return ev.select(
+    return ev.selectExpr(
         "event_id",
-        W.delta1("value", w).alias("d1"),
-        W.lead_delta("value", w).alias("d_lead"),
+        f"{W.delta1('value', w)} AS d1",
+        f"{W.lead_delta('value', w)} AS d_lead",
     )
 
 _SQL_LAG_LEAD_DELTA = f"""
@@ -73,8 +73,8 @@ def _duck_edge_lag(col: str, k: int) -> str:
 def _q_delta9(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _t(spark, sf_dir, "events")
     w = _uw()
-    return ev.select(
-        "event_id", F.round(W.delta_trailing("value", w, half=4), 6).alias("d9")
+    return ev.selectExpr(
+        "event_id", f"round({W.delta_trailing('value', w, half=4)}, 6) AS d9"
     )
 
 # same term order & parenthesization as operators.windows.delta_trailing
@@ -91,12 +91,12 @@ FROM events
 def _q_rolling_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _t(spark, sf_dir, "events")
     w = _uw()
-    return ev.select(
+    return ev.selectExpr(
         "event_id",
-        F.round(W.rolling_mean("value", w, 5), 6).alias("rmean"),
-        F.round(W.rolling_std_pop("value", w, 5), 6).alias("rstd"),
-        W.rolling_min("value", w, 5).alias("rmin"),
-        W.rolling_max("value", w, 5).alias("rmax"),
+        f"round({W.rolling_mean('value', w, 5)}, 6) AS rmean",
+        f"round({W.rolling_std_pop('value', w, 5)}, 6) AS rstd",
+        f"{W.rolling_min('value', w, 5)} AS rmin",
+        f"{W.rolling_max('value', w, 5)} AS rmax",
     )
 
 _SQL_ROLLING_STATS = f"""
@@ -112,8 +112,8 @@ WINDOW w5 AS ({_WU} ROWS BETWEEN 4 PRECEDING AND CURRENT ROW)
 def _q_rolling_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _t(spark, sf_dir, "events")
     w = _uw()
-    return ev.select(
-        "event_id", F.round(W.rolling_median("value", w, 5), 6).alias("rmed")
+    return ev.selectExpr(
+        "event_id", f"round({W.rolling_median('value', w, 5)}, 6) AS rmed"
     )
 
 _SQL_ROLLING_MEDIAN = f"""
@@ -127,8 +127,8 @@ def _q_savgol(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _t(spark, sf_dir, "events")
     w = _uw()
     coeffs = W.savgol_coeffs(11, 3)
-    return ev.select(
-        "event_id", F.round(W.weighted_window("value", w, coeffs), 6).alias("smooth")
+    return ev.selectExpr(
+        "event_id", f"round({W.weighted_window('value', w, coeffs)}, 6) AS smooth"
     )
 
 def _sql_savgol() -> str:
@@ -146,8 +146,8 @@ def _q_gauss_smooth(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _t(spark, sf_dir, "events")
     w = _uw()
     coeffs = W.gaussian_coeffs(9, 2.0)
-    return ev.select(
-        "event_id", F.round(W.weighted_window("value", w, coeffs), 6).alias("smooth")
+    return ev.selectExpr(
+        "event_id", f"round({W.weighted_window('value', w, coeffs)}, 6) AS smooth"
     )
 
 def _sql_gauss() -> str:
@@ -162,10 +162,10 @@ def _sql_gauss() -> str:
 def _q_preemph_zcr(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _t(spark, sf_dir, "events").withColumn("c", F.col("value") - 100.0)
     w = _uw()
-    return ev.select(
+    return ev.selectExpr(
         "event_id",
-        F.round(W.preemphasis("value", w, 0.97), 6).alias("preemph"),
-        F.round(W.sign_change_rate("c", w, 10), 6).alias("scr"),
+        f"round({W.preemphasis('value', w, 0.97)}, 6) AS preemph",
+        f"round({W.sign_change_rate('c', w, 10)}, 6) AS scr",
     )
 
 _SQL_PREEMPH_ZCR = f"""
@@ -184,11 +184,11 @@ FROM flips
 def _q_running_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _t(spark, sf_dir, "events")
     w = _uw()
-    return ev.select(
+    return ev.selectExpr(
         "event_id",
-        F.round(W.running_sum(F.col("value"), w), 6).alias("cum_value"),
-        W.running_max("value", w).alias("cum_max"),
-        F.row_number().over(w).alias("rn"),
+        f"round({W.running_sum('value', w)}, 6) AS cum_value",
+        f"{W.running_max('value', w)} AS cum_max",
+        f"row_number() {w.over()} AS rn",
     )
 
 _SQL_RUNNING_TOTALS = f"""
@@ -201,9 +201,7 @@ FROM events
 
 def _q_top1_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _t(spark, sf_dir, "events")
-    out = W.top1_per_group(
-        ev, keys=["user_id"], order_cols=[F.col("ts").desc(), F.col("event_id").desc()]
-    )
+    out = W.top1_per_group(ev, keys=["user_id"], order=["ts DESC", "event_id DESC"])
     return out.select("user_id", "event_id", "ts", "value")
 
 _SQL_TOP1 = """
@@ -220,7 +218,7 @@ def _q_trim_active(spark: SparkSession, sf_dir: str) -> DataFrame:
     user (librosa.effects.trim analog, core/feature_extractor.py:72)."""
     ev = _t(spark, sf_dir, "events")
     out = trim_to_active(
-        ev, keys=["user_id"], ts="ts", active=F.col("value") >= TRIM_THRESH
+        ev, keys=["user_id"], ts="ts", active=f"value >= {dbl(TRIM_THRESH)}"
     )
     return out.select("event_id", "user_id", "ts")
 
@@ -279,8 +277,8 @@ def _q_delta9_centered(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact centered librosa-style delta (W2 non-causal variant)."""
     ev = _t(spark, sf_dir, "events")
     w = _uw()
-    return ev.select(
-        "event_id", F.round(W.delta_centered("value", w, half=4), 6).alias("d9c")
+    return ev.selectExpr(
+        "event_id", f"round({W.delta_centered('value', w, half=4)}, 6) AS d9c"
     )
 
 def _duck_edge_lead(col: str, k: int) -> str:
@@ -305,7 +303,7 @@ def _q_time_range_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Event-time RANGE frame (W12 time-based form): per user, count and sum
     over the trailing 24 h of *event time* — a range frame over int64 µs, not
     a row-count frame (ties included as frame peers on both engines)."""
-    ev = _t(spark, sf_dir, "events").withColumn("us", ts_micros("ts"))
+    ev = _t(spark, sf_dir, "events").withColumn("us", F.expr(ts_micros("ts")))
     w = (
         Window.partitionBy("user_id")
         .orderBy("us")

@@ -4,7 +4,6 @@ import numpy as np
 import pandas as pd
 import pytest
 
-from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from audio_feature_extraction_spark.operators import windows as W
@@ -35,11 +34,11 @@ W_SPEC = None
 
 
 def wspec():
-    return Window.partitionBy("k").orderBy("i")
+    return W.entity_window(["k"], ["i"])
 
 
-def col_np(df, col, **kw):
-    out = df.select("i", col.alias("o")).toPandas().sort_values("i")
+def col_np(df, sql, **kw):
+    out = df.selectExpr("i", f"{sql} AS o").toPandas().sort_values("i")
     return out.o.to_numpy()
 
 
@@ -58,7 +57,7 @@ def test_locf_and_backfill(df):
 def test_delta1_and_preemphasis(df):
     w = wspec()
     filled = locf("x", w)
-    d = df.withColumn("v", filled)
+    d = df.withColumn("v", F.expr(filled))
     got = col_np(d, W.delta1("v", w))
     v = np.array([3, 3, 1, 1, 1, 4, -2, -2.0])
     exp = np.concatenate([[0.0], np.diff(v)])
@@ -70,7 +69,7 @@ def test_delta1_and_preemphasis(df):
 
 def test_delta_trailing_edge_replication(df):
     w = wspec()
-    d = df.withColumn("v", locf("x", w))
+    d = df.withColumn("v", F.expr(locf("x", w)))
     got = col_np(d, W.delta_trailing("v", w, half=4))
     v = np.array([3, 3, 1, 1, 1, 4, -2, -2.0])
     xp = np.concatenate([np.full(8, v[0]), v])
@@ -83,7 +82,7 @@ def test_delta_trailing_edge_replication(df):
 
 def test_delta_centered(df):
     w = wspec()
-    d = df.withColumn("v", locf("x", w))
+    d = df.withColumn("v", F.expr(locf("x", w)))
     got = col_np(d, W.delta_centered("v", w, half=1))
     v = np.array([3, 3, 1, 1, 1, 4, -2, -2.0])
     vp = np.concatenate([[v[0]], v, [v[-1]]])
@@ -93,7 +92,7 @@ def test_delta_centered(df):
 
 def test_rolling_stats_and_cumulative(df):
     w = wspec()
-    d = df.withColumn("v", locf("x", w))
+    d = df.withColumn("v", F.expr(locf("x", w)))
     v = np.array([3, 3, 1, 1, 1, 4, -2, -2.0])
     got_m = col_np(d, W.rolling_mean("v", w, 3))
     exp_m = np.array([v[max(0, i - 2) : i + 1].mean() for i in range(len(v))])
@@ -101,7 +100,7 @@ def test_rolling_stats_and_cumulative(df):
     got_s = col_np(d, W.rolling_std_pop("v", w, 3))
     exp_s = np.array([v[max(0, i - 2) : i + 1].std() for i in range(len(v))])
     assert np.allclose(got_s, exp_s)
-    got_c = col_np(d, W.running_sum(F.col("v"), w))
+    got_c = col_np(d, W.running_sum("v", w))
     assert np.allclose(got_c, np.cumsum(v))
     got_rm = col_np(d, W.running_max("v", w))
     assert np.allclose(got_rm, np.maximum.accumulate(v))
@@ -112,7 +111,7 @@ def test_rolling_stats_and_cumulative(df):
 
 def test_weighted_window_savgol(df):
     w = wspec()
-    d = df.withColumn("v", locf("x", w))
+    d = df.withColumn("v", F.expr(locf("x", w)))
     v = np.array([3, 3, 1, 1, 1, 4, -2, -2.0])
     coeffs = W.savgol_coeffs(window=5, polyorder=2)
     # moving-average check: uniform weights == trailing mean with edge pad
@@ -133,7 +132,7 @@ def test_weighted_window_savgol(df):
 
 def test_sign_change_rate(df):
     w = wspec()
-    d = df.withColumn("v", locf("x", w))
+    d = df.withColumn("v", F.expr(locf("x", w)))
     got = col_np(d, W.sign_change_rate("v", w, 4))
     v = np.array([3, 3, 1, 1, 1, 4, -2, -2.0])
     flips = np.concatenate([[0.0], (np.sign(v[1:]) * np.sign(v[:-1]) < 0).astype(float)])
@@ -155,12 +154,12 @@ def test_sessionize_merge_then_filter(spark, df):
 def test_top1_per_group(spark):
     pdf = pd.DataFrame({"g": ["a", "a", "b"], "v": [1.0, 5.0, 2.0], "id": [1, 2, 3]})
     d = spark.createDataFrame(pdf, "g string, v double, id int")
-    out = W.top1_per_group(d, ["g"], [F.desc("v"), F.asc("id")]).toPandas()
+    out = W.top1_per_group(d, ["g"], ["v DESC", "id ASC"]).toPandas()
     assert set(out.id) == {2, 3}
 
 
 def test_clip(df):
-    got = col_np(df.withColumn("v", locf("x", wspec())), clip("v", -1.0, 2.0))
+    got = col_np(df.withColumn("v", F.expr(locf("x", wspec()))), clip("v", -1.0, 2.0))
     v = np.array([3, 3, 1, 1, 1, 4, -2, -2.0])
     assert np.allclose(got, np.clip(v, -1, 2))
 
@@ -201,16 +200,17 @@ def test_rolling_median_all_null_frame(spark):
     (INVALID_INDEX_OF_ZERO); the median must be NULL, not an error."""
     from datetime import datetime
 
-    from pyspark.sql import Window
-
-    from audio_feature_extraction_spark.operators.windows import rolling_median
+    from audio_feature_extraction_spark.operators.windows import (
+        entity_window,
+        rolling_median,
+    )
 
     rows = [
         ("a", datetime(2024, 1, 1, 0, 0, 0), None),
         ("a", datetime(2024, 1, 1, 0, 0, 1), 5.0),
     ]
     df = spark.createDataFrame(rows, "k string, ts timestamp, v double")
-    w = Window.partitionBy("k").orderBy("ts")
-    out = df.select("ts", rolling_median("v", w, 3).alias("med")).collect()
+    w = entity_window(["k"], ["ts"])
+    out = df.select("ts", F.expr(rolling_median("v", w, 3)).alias("med")).collect()
     got = {r["ts"].second: r["med"] for r in out}
     assert got[0] is None and got[1] == 5.0

@@ -10,7 +10,9 @@ plan shape, so lock it in:
 - stacked window expressions over one spec collapse into one Window node
   (one sort, not five).
 
-These assert on plan text only — no jobs run, so the suite stays fast.
+These assert on plan text, except the flagship's fat-exchange test, which
+runs the pipeline once on sf0.001 and reads shuffle bytes from the status
+store, and the plan-build budget, which counts Py4J commands.
 """
 
 from __future__ import annotations
@@ -19,7 +21,6 @@ import re
 
 import pytest
 
-from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 import __spark_entry__ as em
@@ -40,6 +41,79 @@ def test_pipeline_single_exchange(tiny_df):
     # createDataFrame inputs are local scans; the one exchange is the
     # doc_id-clustered repartition feeding the as-of window + all features
     assert len(re.findall(r"Exchange hashpartitioning", plan)) == 1, plan
+
+
+def test_pipeline_three_window_nodes(tiny_df):
+    """The as-of window plus one Window node per feature layer."""
+    seq, ref = tiny_df
+    plan = _plan(feature_pipeline(seq, ref))
+    assert len(re.findall(r"\bWindow \[", plan)) == 3, plan
+
+
+def test_pipeline_build_py4j_budget(tiny_df, monkeypatch):
+    """Building the flagship plan is a handful of selectExpr calls, not a
+    Column tree of thousands of Py4J round trips."""
+    import py4j.clientserver as cs
+
+    seq, ref = tiny_df
+    feature_pipeline(seq, ref)  # lazy JVM-side set-up is not the budget
+    calls = []
+    send = cs.ClientServerConnection.send_command
+
+    def counting(self, command):
+        calls.append(command)
+        return send(self, command)
+
+    monkeypatch.setattr(cs.ClientServerConnection, "send_command", counting)
+    feature_pipeline(seq, ref)
+    monkeypatch.undo()
+    assert 0 < len(calls) <= 250, len(calls)
+
+
+def _shuffle_write_bytes(spark, group: str) -> list[int]:
+    """Bytes each executed shuffle-map stage of ``group``'s jobs wrote."""
+    sc = spark.sparkContext
+    jsc = sc._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty()
+    tracker, store = sc.statusTracker(), jsc.statusStore()
+    no_quantiles = sc._gateway.new_array(sc._jvm.double, 0)
+    out = {}
+    for j in tracker.getJobIdsForGroup(group):
+        for sid in tracker.getJobInfo(j).stageIds:
+            stages = store.stageData(sid, False, None, False, no_quantiles)
+            for i in range(stages.size()):
+                st = stages.apply(i)
+                if st.status().toString() != "SKIPPED" and st.shuffleWriteBytes() > 0:
+                    out[(st.stageId(), st.attemptId())] = st.shuffleWriteBytes()
+    return sorted(out.values())
+
+
+def test_pipeline_fat_rows_cross_one_exchange_by_bytes(spark):
+    """ROADMAP item 1 by bytes, not plan text: exactly one shuffle stage
+    carries the token rows. Every other exchange (the slim pre-token
+    repartition, the reference dedup) writes at most half of it; on sf0.001
+    the slim one writes ~0.36 of the fat one (lz4 shrinks the 1..n token
+    arrays), and tokens crossing it too would bring it to ~1."""
+    from audio_feature_extraction_spark.plans.from_events import (
+        reference_from_events,
+        sequences_from_events,
+    )
+
+    ev = spark.read.parquet(f"{SF_DIR}/events.parquet")
+    seq = sequences_from_events(ev)
+    out = feature_pipeline(seq, reference_from_events(ev))
+    sc = spark.sparkContext
+    group = "test-plan-shape-fat-exchange"
+    sc.setJobGroup(group, group, False)
+    try:
+        out.write.format("noop").mode("overwrite").save()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    writes = _shuffle_write_bytes(spark, group)
+    token_bytes = 4 * seq.agg(F.sum("n_tok")).first()[0]
+    assert writes and writes[-1] >= token_bytes / 4, (writes, token_bytes)
+    assert all(b <= writes[-1] / 2 for b in writes[:-1]), writes
 
 
 def test_pipeline_single_exchange_on_parquet(spark):
@@ -94,13 +168,13 @@ def test_dim_join_broadcasts(spark):
 
 def test_stacked_windows_single_sort(tiny_df):
     seq, _ = tiny_df
-    w = Window.partitionBy("doc_id").orderBy("ts", "seq")
+    w = W.entity_window(["doc_id"], ["ts", "seq"])
     df = (
-        seq.withColumn("v_filled", locf("value", w, default=0.0))
-        .withColumn("d1", W.delta1("v_filled", w))
-        .withColumn("rm", W.rolling_mean("v_filled", w, 5))
-        .withColumn("rs", W.rolling_std_pop("v_filled", w, 5))
-        .withColumn("cum", W.running_sum(F.col("n_tok").cast("long"), w))
+        seq.withColumn("v_filled", F.expr(locf("value", w, default=0.0)))
+        .withColumn("d1", F.expr(W.delta1("v_filled", w)))
+        .withColumn("rm", F.expr(W.rolling_mean("v_filled", w, 5)))
+        .withColumn("rs", F.expr(W.rolling_std_pop("v_filled", w, 5)))
+        .withColumn("cum", F.expr(W.running_sum("CAST(n_tok AS BIGINT)", w)))
     )
     plan = _plan(df)
     # same partitioning + ordering → one exchange and at most two sorts

@@ -10,12 +10,12 @@ import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
-from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from audio_feature_extraction_spark.operators.asof import asof_join, dedupe_right
 from audio_feature_extraction_spark.operators.backfill import locf
 from audio_feature_extraction_spark.operators.sessionize import with_session_id
+from audio_feature_extraction_spark.operators.windows import entity_window
 
 KEYS = ["a", "b", "c"]
 
@@ -57,10 +57,10 @@ def _to_sdf(spark, pdf):
 @SETTINGS
 def test_locf_matches_pandas_ffill(spark, rows):
     pdf = _to_pdf(rows)
-    w = Window.partitionBy("k").orderBy("ts", "rid")
+    w = entity_window(["k"], ["ts", "rid"])
     got = (
         _to_sdf(spark, pdf)
-        .select("rid", locf("v", w, default=None).alias("f"))
+        .select("rid", F.expr(locf("v", w, default=None)).alias("f"))
         .toPandas()
         .sort_values("rid")
         .reset_index(drop=True)

@@ -33,7 +33,7 @@ def test_trim_keeps_interior_inactive_rows(spark):
         ],
         "k string, ts timestamp, v double",
     )
-    out = trim_to_active(df, keys=["k"], ts="ts", active=F.col("v") >= 5.0)
+    out = trim_to_active(df, keys=["k"], ts="ts", active="v >= 5.0D")
     rows = sorted((r.k, r.ts.hour) for r in out.collect())
     assert rows == [("a", 1), ("a", 2), ("a", 3)]
 

@@ -32,12 +32,10 @@ import pandas as pd
 sys.path.insert(0, ".")
 
 import __spark_entry__ as entry_mod  # noqa: E402
+from audio_feature_extraction_spark.queries.common import TABLE_SCHEMAS  # noqa: E402
 from audio_feature_extraction_spark.session import get_spark  # noqa: E402
 
-TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
+TABLES = list(TABLE_SCHEMAS)
 
 
 def canon(pdf: pd.DataFrame) -> pd.DataFrame:
