@@ -18,6 +18,7 @@ store, and the plan-build budget, which counts Py4J commands.
 from __future__ import annotations
 
 import re
+import threading
 
 import pytest
 
@@ -59,9 +60,13 @@ def test_pipeline_build_py4j_budget(tiny_df, monkeypatch):
     feature_pipeline(seq, ref)  # lazy JVM-side set-up is not the budget
     calls = []
     send = cs.ClientServerConnection.send_command
+    me = threading.get_ident()
 
     def counting(self, command):
-        calls.append(command)
+        # Py4J's finalizer thread sends the releases of objects that earlier
+        # tests dropped on its own schedule: count this thread's commands
+        if threading.get_ident() == me:
+            calls.append(command)
         return send(self, command)
 
     monkeypatch.setattr(cs.ClientServerConnection, "send_command", counting)
