@@ -5,12 +5,14 @@ every shipped tier, and building a query must start no Spark job."""
 from __future__ import annotations
 
 import pytest
+from test_plan_shape import SF_DIR
 
 import __spark_entry__ as em
 from audio_feature_extraction_spark.queries.common import TABLE_SCHEMAS, _t
 from tools.check_entry import TABLES
 
-TIERS = ["/root/testdata/sf0.001", "/root/testdata/sf0.01", "/root/testdata/sf0.1"]
+# the three shipped tiers, beside the sf0.001 one the plan tests read
+TIERS = [SF_DIR.replace("sf0.001", sf) for sf in ("sf0.001", "sf0.01", "sf0.1")]
 
 
 @pytest.mark.parametrize("sf_dir", TIERS)
